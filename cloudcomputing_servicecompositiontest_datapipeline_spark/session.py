@@ -114,7 +114,26 @@ def get_spark(app_name: str = "spark-graft", master: str | None = None) -> Spark
     builder = builder.config(
         "spark.local.dir", os.path.join(scratch_root(), "local")
     )
-    return builder.getOrCreate()
+    return _bound_listing_parallelism(builder.getOrCreate())
+
+
+def _bound_listing_parallelism(spark: SparkSession) -> SparkSession:
+    """Cap parallel file listing at one task per slot.
+
+    Above 32 input paths Spark lists them with a distributed job of
+    ``min(paths, spark.sql.sources.parallelPartitionDiscovery.parallelism)``
+    tasks, and that conf defaults to 10000 — in effect one task per path.
+    A streaming file source hands every micro-batch its files as individual
+    paths, so each available-now drain of N landed JSON files launched N
+    single-``stat`` tasks (and a restart re-lists the previous batch's files
+    the same way).  More tasks than slots buy no listing parallelism, so
+    the value is the session's slot count: derived, not an option, because
+    it follows the cluster — a 1000-slot cluster still lists 1000-wide."""
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        str(spark.sparkContext.defaultParallelism),
+    )
+    return spark
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -191,6 +210,7 @@ def apply_runtime_conf(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # static conf on a live session — keep the session's value
+    _bound_listing_parallelism(spark)
     try:
         spark._sg_conf_applied = True
     except AttributeError:

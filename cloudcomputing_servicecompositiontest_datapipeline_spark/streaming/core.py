@@ -85,7 +85,14 @@ def available_now_compile(
     analogue) into a durable parquet table with available-now semantics;
     returns the compiled (cumulative) DataFrame.  The stream is checkpointed:
     a re-drain reads only files that arrived since the last one — the
-    incremental version of the reference's full bucket pull."""
+    incremental version of the reference's full bucket pull.  It still
+    lists more than those: each drain lists its new files, plus, on a
+    restart, the previous batch's files, which the file source re-plans to
+    recover its position (see ``session._bound_listing_parallelism``).
+
+    The table is read back with the caller's ``schema``: a drain of an
+    empty bucket then yields an empty frame rather than a failed parquet
+    schema inference, and no drain pays a footer-reading job."""
     stream = spark.readStream.schema(schema).json(json_dir)
     q = (
         stream.writeStream.format("parquet")
@@ -95,7 +102,7 @@ def available_now_compile(
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(output_dir)
+    return spark.read.schema(schema).parquet(output_dir)
 
 
 def tumbling_windowed_agg(

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -29,20 +30,76 @@ def run_dir(tmp_path):
     return str(d)
 
 
+def _land(run_dir, run_ids):
+    for i in run_ids:
+        with open(os.path.join(run_dir, f"run{i}.json"), "w") as f:
+            json.dump({"run_id": i, "uuid": f"c{i % 2}", "value": float(i), "ts": "2024-01-01 00:00:00"}, f)
+
+
+def _tasks_launched(spark, fn):
+    """Return ``fn()`` and the number of tasks of every Spark job started
+    while it ran.  Job ids are sequential, so the drain's jobs are those
+    between two one-task marker jobs run in a private job group; once a
+    marker shows up in the status store, every earlier job has too."""
+    sc, group = spark.sparkContext, "test_streaming_marker"
+    st = sc.statusTracker()
+
+    def marker():
+        seen = set(st.getJobIdsForGroup(group))
+        sc.setJobGroup(group, group)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 30
+        while not (new := set(st.getJobIdsForGroup(group)) - seen):
+            assert time.monotonic() < deadline, "marker job never reached the status store"
+            time.sleep(0.01)
+        return max(new)
+
+    start = marker()
+    out = fn()
+    end = marker()
+    return out, sum(
+        st.getStageInfo(stage).numTasks
+        for job in range(start + 1, end)
+        for stage in st.getJobInfo(job).stageIds
+    )
+
+
 def test_available_now_drains_all_then_incrementally(spark, run_dir, tmp_path):
+    """Each drain lists more files than Spark's 32-path threshold for
+    parallel listing; the listing job must not launch one task per file,
+    neither on the first drain nor on the restarted one, which also
+    re-lists the first drain's files."""
     ckpt, outdir = str(tmp_path / "ckpt"), str(tmp_path / "out")
+
+    def drain():
+        return available_now_compile(
+            spark, run_dir, _parse_datatype_string(SCHEMA), checkpoint=ckpt, output_dir=outdir
+        )
+
+    _land(run_dir, range(6, 34))
+    out, tasks = _tasks_launched(spark, drain)
+    assert out.count() == 34
+    assert tasks < 34
+    # new records land in the "bucket"; the re-drain is incremental (only
+    # the new files are read, cumulative table now holds all of them)
+    _land(run_dir, range(34, 67))
+    out2, tasks2 = _tasks_launched(spark, drain)
+    assert sorted(r.run_id for r in out2.collect()) == list(range(67))
+    assert tasks2 < 33
+
+
+def test_available_now_drains_empty_bucket(spark, tmp_path):
+    empty = tmp_path / "runs"
+    empty.mkdir()
     out = available_now_compile(
-        spark, run_dir, _parse_datatype_string(SCHEMA), checkpoint=ckpt, output_dir=outdir
+        spark, str(empty), _parse_datatype_string(SCHEMA),
+        checkpoint=str(tmp_path / "ckpt"), output_dir=str(tmp_path / "out"),
     )
-    assert out.count() == 6
-    # a new record lands in the "bucket"; the re-drain is incremental (only
-    # the new file is read, cumulative table now holds all 7)
-    with open(os.path.join(run_dir, "run7.json"), "w") as f:
-        json.dump({"run_id": 7, "uuid": "c1", "value": 7.0, "ts": "2024-01-01 00:07:00"}, f)
-    out2 = available_now_compile(
-        spark, run_dir, _parse_datatype_string(SCHEMA), checkpoint=ckpt, output_dir=outdir
-    )
-    assert {r.run_id for r in out2.collect()} == set(range(6)) | {7}
+    assert out.collect() == []
+    assert out.schema == _parse_datatype_string(SCHEMA)
 
 
 def test_streaming_tumbling_window_counts_match_batch(spark, run_dir, tmp_path):

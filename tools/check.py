@@ -35,7 +35,7 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _args = [a for a in sys.argv[1:] if a != "--window"]
 #: --window: check exactly the DRIVER_WINDOW slice (the 50 queries the
